@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import Mains.{jsonString => jstr}
 object Bench {
 
   /** Fixed headline queries carried in the stdout envelope. */
@@ -24,42 +24,26 @@ object Bench {
   private[graft] def envelope(total: Double, headline: Seq[(String, Double)],
                               nErrors: Int, reps: Int, sfName: String,
                               cpus: Int): String = {
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    def r3(v: Double): String =
-      if (v < 0) "-1"
-      else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val headJson = headline.map { case (h, v) => jstr(h) + ":" + r3(v) }
       .mkString("{", ",", "}")
     s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$headJson,"errors":$nErrors,"reps":$reps,"cpus":$cpus,"sf":${jstr(sfName)}}"""
   }
+
+  /** 3-decimal rounding: millisecond precision is all the comparison
+    * needs, and it keeps the single-line JSON inside the tail-capture
+    * window of the harness that parses Bench's last stdout line (rounds 2 and 3 both came back "parsed": null
+    * because 9-digit timings pushed the line past ~4.5 KB). A failed
+    * query's -1 stays -1. */
+  private def r3(v: Double): String =
+    if (v < 0) "-1"
+    else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to every core on the box (the driver's bench host has 32);
-    // an explicit SPARK_GRAFT_CPUS still wins for local experiments
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // exclusion twin of ONLY (both contains-match): lets scale runs drop
-    // query families whose fixtures are invalid at that scale (e.g. the
-    // ScaleGen corpus replicates embedding vectors as exact clones, so
-    // embedding-similarity pair counts there model nothing real)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
-      .filter { case (n, _) => !skip.exists(_.exists(n.contains)) }
+    val spark = graft.core.Sessions.local(appName = "graft-bench")
+    // the core count the session actually runs with, echoed in the envelope
+    val cpus = spark.sparkContext.defaultParallelism
+    val selected = Mains.selected.sortBy(_.name)
     // warm the JVM/codegen/file-index paths so the first timed query does
     // not absorb session startup: shuffle machinery, every table's parquet
     // footer, and the text-function/md5/shingle codegen the corpus queries
@@ -99,7 +83,8 @@ object Bench {
     // text-kernel codegen BEFORE any timed rep, so rep 1 never absorbs
     // session startup.
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt.max(1)
-    val results = selected.map { case (name, fn) =>
+    val results = selected.map { entry =>
+      val name = entry.name
       val times = (1 to reps).flatMap { _ =>
         // elapsed is captured IMMEDIATELY after save() returns, before the
         // finally-block housekeeping: release/clearCache/System.gc on a
@@ -111,7 +96,7 @@ object Bench {
           val t0 = System.nanoTime()
           // noop sink: forces every column to be computed (count() would let
           // the optimizer prune the projections entirely for narrow queries)
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          entry.build(spark, sfDir).write.format("noop").mode("overwrite").save()
           elapsed = Some((System.nanoTime() - t0) / 1e9)
         } catch { case e: Throwable =>
           errors.getOrElseUpdate(name,
@@ -140,23 +125,12 @@ object Bench {
       // a failed query reports -1, never a fast fake timing
       name -> (if (times.nonEmpty) times.min else -1.0)
     }
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
-    // 3-decimal rounding: millisecond precision is all the comparison needs,
-    // and it keeps the single-line JSON inside the driver's tail-capture
-    // window (rounds 2 and 3 both came back "parsed": null because 9-digit
-    // timings pushed the line past ~4.5 KB; rounded it is ~1.8 KB)
-    def r3(v: Double): String =
-      if (v < 0) "-1" else BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     val qs = results.map { case (k, v) => jstr(k) + ":" + r3(v) }
       .mkString("{", ",", "}")
     val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
-    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$errJson,"reps":$reps,"sf":"$sfDir"}"""
+    val full = s"""{"metric":"total","value":${r3(total)},"unit":"sec","queries":$qs,"errors":$errJson,"reps":$reps,"sf":${jstr(sfDir)}}"""
     // The driver captures only the TAIL of stdout and parses the last
     // line; the full 97-query map (~3.5 KB) overflowed that window three
     // rounds running ("parsed": null). The stdout line therefore carries
@@ -175,8 +149,7 @@ object Bench {
       .sortBy(-_._2).take(3)
     val line = envelope(total,
       Headline.flatMap(h => resultMap.get(h).map(h -> _)) ++ slowest,
-      errors.size, reps, sfName,
-      scala.util.Try(cpus.toInt).getOrElse(-1))
+      errors.size, reps, sfName, cpus)
     // on-disk mirror with the FULL per-query map (same 3-decimal rounding);
     // never parsed by the driver, read locally and by BASELINE.md updates
     try {

@@ -1,46 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.core.Sessions.local(appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter, same contract as Bench: comma-separated
-    // substrings; unset = everything (the driver never sets it)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // exclusion twin of ONLY, same contract as Bench: contains-match,
-    // used by scale runs to drop families whose fixtures are invalid
-    // at that scale (the ScaleGen embedding-clone note)
-    val skip = sys.env.get("SPARK_GRAFT_SKIP").map(_.split(",").toSet)
     // default single-file output (the driver's layout); =0 keeps the
     // query's own partitioning so compute stays parallel — the knob
     // that makes a full-registry sf1 verify a half-hour instead of
     // hours (coalesce(1) pulls the whole plan into ONE task)
     val coalesce1 = sys.env.get("SPARK_GRAFT_VERIFY_COALESCE").forall(_ != "0")
-    SparkEntry.queries
-      .filter { case (n, _) => only.forall(_.exists(n.contains)) }
-      .filter { case (n, _) => !skip.exists(_.exists(n.contains)) }
-      .foreach { case (name, fn) =>
+    Mains.selected.foreach { e =>
       try {
-        val df = fn(spark, sfDir)
+        val df = e.build(spark, sfDir)
         (if (coalesce1) df.coalesce(1) else df)
-          .write.mode("overwrite").parquet(s"$outDir/$name")
+          .write.mode("overwrite").parquet(s"$outDir/${e.name}")
       }
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      catch { case err: Throwable =>
+        System.err.println(s"[verify] ${e.name} failed: ${err.getMessage}")
       }
       finally {
         // operators persist intermediates — drain the graft-tracked ones
@@ -49,20 +28,9 @@ object Verify {
         spark.catalog.clearCache()
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Mains.jsonString(k)}: ${Mains.jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

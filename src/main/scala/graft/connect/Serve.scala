@@ -32,13 +32,14 @@ object Serve {
   final case class Unauthorized(msg: String) extends RuntimeException(msg)
 
   /** Verifier that admits everything — for deployments that terminate
-    * auth upstream (the default keeps existing call sites working). */
+    * auth upstream. [[records]] has no default verifier, so serving
+    * without auth is always spelled out at the call site. */
   val AllowAll: String => Boolean = _ => true
 
   def records(spark: SparkSession, root: String, keyword: String,
               date: java.time.LocalDate, contract: StructType,
-              limit: Int = 1000, token: String = "",
-              tokenVerifier: String => Boolean = AllowAll): Seq[String] = {
+              limit: Int = 1000, token: String,
+              tokenVerifier: String => Boolean): Seq[String] = {
     if (!tokenVerifier(token))
       throw Unauthorized(s"token rejected for keyword=$keyword date=$date")
     val path = Csv.datedPath(s"$root/{date}/${keyword}_{date}.csv", date)

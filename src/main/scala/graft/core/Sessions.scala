@@ -2,7 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory for the engine.
+/** The engine's ONLY SparkSession factory: every main (Bench, Verify,
+  * the plan/profile tools, ScaleGen) and every embedding caller gets its
+  * session here.
   *
   * Replaces the reference's ad-hoc `init_spark()`
   * (reference: ETL_Airflow/dags/tasks/utils.py:10-31) with a single place
@@ -10,15 +12,15 @@ import org.apache.spark.sql.SparkSession
   *   - UTC session time zone (reference results depended on wall-clock/locale)
   *   - AQE on (runtime skew-join + partition coalescing; the reference ran
   *     stock defaults on a 2-core worker)
-  *   - shuffle partitions sized to the local core count, not 200.
+  *   - shuffle partitions = the local core count, not 200
+  *   - graft's optimizer extensions and [[joinTuning]].
   */
 object Sessions {
 
-  /** Join-strategy settings shared by EVERY engine entrypoint (this
-    * factory, Bench, Verify, the plan tools) — before round 14 the
-    * bench/verify mains built bare sessions and measured a different
-    * engine configuration than [[local]] shipped (28 registry plans
-    * carried SortMergeJoins the engine session would not plan).
+  /** Join-strategy settings every engine session carries — before
+    * round 14 the bench/verify mains built bare sessions and measured a
+    * different engine configuration than [[local]] shipped (28 registry
+    * plans carried SortMergeJoins the engine session would not plan).
     * All three are scale-adaptive, not local-core tuning:
     *  - preferSortMergeJoin=false lets the planner pick shuffled-hash
     *    (no sort of either side) when its size conditions hold; with
@@ -46,19 +48,18 @@ object Sessions {
     // 5.76 → 3.76 s, ann_recall 7.65 → 5.19 s, same-session pairs).
     "spark.sql.codegen.cache.maxEntries" -> "2000")
 
-  /** Apply [[joinTuning]] to any session builder. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    joinTuning.foldLeft(b) { case (bb, (k, v)) => bb.config(k, v) }
+  /** `SPARK_GRAFT_CPUS` when set (local experiments, the scaling probe),
+    * else every core on the box. */
+  private def defaultCores: Int = sys.env.get("SPARK_GRAFT_CPUS")
+    .map(_.trim.toInt).getOrElse(Runtime.getRuntime.availableProcessors())
 
-  def local(cores: Int = Runtime.getRuntime.availableProcessors(),
-            shufflePartitions: Option[Int] = None,
-            appName: String = "graft"): SparkSession = {
-    val sp = shufflePartitions.getOrElse(math.max(cores, 4))
-    val b = tune(SparkSession
-      .builder())
+  /** A `local[cores]` engine session with `cores` shuffle partitions. */
+  def local(cores: Int = defaultCores, appName: String = "graft"): SparkSession = {
+    val b = joinTuning.foldLeft(SparkSession.builder()) {
+        case (bb, (k, v)) => bb.config(k, v) }
       .master(s"local[$cores]")
       .appName(appName)
-      .config("spark.sql.shuffle.partitions", sp.toString)
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")

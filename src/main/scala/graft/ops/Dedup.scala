@@ -56,7 +56,15 @@ object Dedup {
   private[ops] def fingerprints(d: DataFrame): DataFrame =
     d.select(col("doc_id"), md5(concat_ws(" ", toks)).as("exact_fp"))
 
-  /** (doc_id, h) exploded hashed shingles for an arbitrary frame. */
+  /** One row per (doc, distinct hashed shingle) of an arbitrary
+    * (doc_id, text) frame. The explode is the ONLY evaluation of the
+    * tokenize→shingle→md5 pipeline: everything downstream aggregates its
+    * output attributes. (Keeping the shingles as an array column instead
+    * lets CollapseProject inline the whole hashing pipeline into every
+    * consumer expression — 16 copies of md5 per row in the naive minhash
+    * formulation; measured 4× slower.) Hashing to 60-bit longs also makes
+    * every exchange and intersection operate on fixed-width longs instead
+    * of ~20-byte strings. */
   private[ops] def explodedShinglesOf(spark: SparkSession, d: DataFrame): DataFrame = {
     graft.functions.GraftFunctions.ensureRegistered(spark)
     // no Spread here (round-14 opt, measured and REJECTED): round-robin
@@ -113,8 +121,7 @@ object Dedup {
   /** Exact dedup on the normalized token stream: every doc labeled with its
     * canonical (minimum) doc_id per fingerprint group. */
   def exact(spark: SparkSession, dir: String): DataFrame = {
-    val fp = docs(spark, dir)
-      .select(col("doc_id"), md5(concat_ws(" ", toks)).as("exact_fp"))
+    val fp = fingerprints(docs(spark, dir))
     val canon = fp.groupBy(col("exact_fp"))
       .agg(min(col("doc_id")).as("canonical_id"), count(lit(1)).as("group_size"))
     fp.join(canon, Seq("exact_fp"))
@@ -163,36 +170,13 @@ object Dedup {
   private[graft] val HashB: IndexedSeq[Long] =
     (0 until MaxHashes).map(i => const60(s"B:$i") & M30)
 
-  /** One row per (doc, distinct hashed shingle). The explode is the ONLY
-    * evaluation of the tokenize→shingle→md5 pipeline: everything
-    * downstream aggregates its output attributes. (Keeping the shingles
-    * as an array column instead lets CollapseProject inline the whole
-    * hashing pipeline into every consumer expression — 16 copies of md5
-    * per row in the naive minhash formulation; measured 4× slower.)
-    * Hashing to 60-bit longs also makes every exchange and intersection
-    * operate on fixed-width longs instead of ~20-byte strings. */
-  private def explodedShingles(spark: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftFunctions.ensureRegistered(spark)
-    docs(spark, dir).select(
-      col("doc_id"),
-      explode(call_function(graft.functions.GraftFunctions.ShingleName,
-        col("text"), lit(ShingleN))).as("h"))
-  }
-
   /** Per-doc shingle set (as an aggregated attribute) and its size. */
   private def docShingles(spark: SparkSession, dir: String): DataFrame =
     docShinglesOf(spark, docs(spark, dir))
 
-  /** Same, over an arbitrary (doc_id, text) frame.
-    *
-    * Map-only (round-14 opt): [[graft.functions.ShingleHash]] already
-    * emits the DISTINCT shingle set per document, so the old
-    * explode → groupBy(collect_set, count) spelling re-built in a full
-    * shuffle exactly the array the kernel had just produced — `sgl` is
-    * the kernel output and `n` its size, one projection, zero exchanges.
-    * Zero-shingle docs (fewer than [[ShingleN]] tokens) surface here as
-    * empty-array rows where the old groupBy dropped them; every consumer
-    * explodes `sgl`, which drops empties identically. */
+  /** Same, over an arbitrary (doc_id, text) frame: the exploded shingles
+    * regrouped per doc — `sgl` is the collected set, `n` its size. Docs
+    * with no shingle (fewer than [[ShingleN]] tokens) produce no row. */
   private def docShinglesOf(spark: SparkSession, d: DataFrame): DataFrame =
     explodedShinglesOf(spark, d)
       .groupBy(col("doc_id"))

@@ -90,10 +90,12 @@ object CustomerSalesReport {
     val agg = sales.groupBy(col("o_custkey").as("customer_id"))
       .agg(sum(col("sale_amount").cast("decimal(18,2)")).cast("double")
         .as("agg_sales_amount"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // not persisted, for the same reason as SupplierPerformance's product
+    // rollup: an unreleased cache would serve a later same-path build this
+    // build's rollup after the input files changed
 
-    // Exact quantile thresholds as a percentile AGGREGATE over the (small,
-    // persisted) customer-level rollup, broadcast-cross-joined back — one
+    // Exact quantile thresholds as a percentile AGGREGATE over the (small)
+    // customer-level rollup, broadcast-cross-joined back — one
     // row, no driver round-trip (the reference's approxQuantile action
     // split the query into 3 jobs — SURVEY §3.3). A `percentile ... OVER ()`
     // empty-frame window would compute the same values but forces ALL rows

@@ -61,11 +61,12 @@ object SupplierPerformance {
 
   def build(spark: SparkSession, dir: String): DataFrame = {
     // the product rollup feeds BOTH the supplier re-rollup and the top-1
-    // ranking branch — persist at the cut (it is dimension-sized: one row
-    // per (supplier, part) pair with sales) so the fact-table join+agg
-    // pipeline runs once
+    // ranking branch. It is NOT persisted here: nothing would ever release
+    // the cache, and the CacheManager matches a cached plan by its input
+    // paths, so a later build over the same paths in the same session would
+    // be served this build's rollup even after the files changed. Callers
+    // that reuse the mart persist its output (Marts.materialize does).
     val prod = productLevel(spark, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // AGG supplier level — re-rollup of the product rollup (reference: A2,
     // m_supplier_performance_task.py:133-141).

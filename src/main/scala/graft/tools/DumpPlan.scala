@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `.explain("formatted")` for the named registry queries to
   * `plans/<tag>/<query>_<suffix>.txt` — the committed evidence for the
   * optimization rounds' plan-shape claims (before/after pairs).
@@ -17,16 +15,7 @@ object DumpPlan {
       .split(",").toSeq
     val sfDir = args.lift(2).getOrElse("/root/testdata/sf0.1")
     val outDir = args.lift(3).getOrElse("plans/r14")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(appName = "graft-dumpplan")
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     try {

@@ -15,14 +15,9 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("PLANS.md")
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    // local[8] whatever the host: PLANS.md has always been generated
+    // that way, so a regeneration elsewhere does not move the audit
+    val spark = graft.core.Sessions.local(8, appName = "graft-planaudit")
     spark.sparkContext.setLogLevel("ERROR")
     try run(spark, sfDir, out)
     finally spark.stop()

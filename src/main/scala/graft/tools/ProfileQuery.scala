@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-phase cost breakdown for one registry query: DataFrame build
   * (analysis), physical planning (optimizer + codegen prep), and
   * repeated executions — the split that tells a fixed-cost query
@@ -16,16 +14,7 @@ object ProfileQuery {
     val name = args.headOption.getOrElse(sys.error("usage: ProfileQuery <query> [sfDir] [runs]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(2).map(_.toInt).getOrElse(3)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(appName = "graft-profile")
     spark.sparkContext.setLogLevel("ERROR")
     val fn = graft.SparkEntry.queries(name)
     // same warm-up as Bench so run 1 is not session startup

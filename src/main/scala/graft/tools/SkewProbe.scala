@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 /** Stage-level skew audit for one registry query (guide §2.5): runs the
   * query once and prints, per stage, task count, median/max task time,
@@ -18,16 +17,7 @@ object SkewProbe {
       sys.error("usage: SkewProbe <query> [sfDir] [minStageMs]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
     val minStageMs = args.lift(2).map(_.toLong).getOrElse(200L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = graft.core.Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
+    val spark = graft.core.Sessions.local(appName = "graft-skewprobe")
     spark.sparkContext.setLogLevel("ERROR")
 
     val taskTimes = new java.util.concurrent.ConcurrentHashMap[

@@ -226,7 +226,8 @@ class NewOpsSpec extends SparkSpec {
     val contract = StructType(Seq(
       StructField("id", LongType), StructField("amount", DoubleType)))
     val out = graft.connect.Serve.records(spark, root.toString, "sales",
-      date, contract, limit = 2)
+      date, contract, limit = 2, token = "",
+      tokenVerifier = graft.connect.Serve.AllowAll)
     assert(out.length == 2)
     assert(out.head.contains("\"id\":1") && out.head.contains("\"amount\":10.5"))
   }

@@ -87,7 +87,7 @@ class Round14ArchivesSpec extends AnyFunSuite {
 
   test("surtKey law: SURT of the canonical URL family used by the CDX " +
     "fixture") {
-    val spark = graft.core.Sessions.local(2, appName = "surt-spec")
+    val spark = graft.core.Sessions.local(4, appName = "surt-spec")
     import spark.implicits._
     import org.apache.spark.sql.functions.col
     val rows = Seq(

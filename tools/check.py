@@ -6,9 +6,10 @@ Usage: python3 tools/check.py <sfDir> <verifyOutDir>
 Reads <verifyOutDir>/oracle_sql.json, runs each SQL in DuckDB over the
 parquet tables in <sfDir>, and compares with the Spark parquet result at
 <verifyOutDir>/<name>/ — rows/schema/value compare with columns sorted by
-name and rows sorted by all columns.
+name and rows sorted by all columns. A Spark result directory with no
+oracle entry is a failure too: an un-oracled query is an unchecked one.
 """
-import sys, json, glob, math
+import sys, json, glob, math, os
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -43,7 +44,6 @@ def norm(rows, cols):
 def main():
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     con = duckdb.connect()
-    import os
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         # ScaleGen snapshots are Spark-written DIRECTORIES of part files
@@ -52,6 +52,11 @@ def main():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    dumps = {d for d in os.listdir(out_dir)
+             if os.path.isdir(os.path.join(out_dir, d))}
+    for name in sorted(dumps - oracles.keys()):
+        print(f"FAIL {name}: spark output has no oracle entry")
+        n_fail += 1
     for name, sql in sorted(oracles.items()):
         files = glob.glob(f"{out_dir}/{name}/*.parquet")
         if not files:
