@@ -13,8 +13,9 @@ final case class IngestResult(entity: String, rows: Long, drift: DriftReport)
 
 /** The reference's ingestion flow (ingestion_task.py:188-246) as one
   * composable function: source frame → drift report → contract
-  * conformance → load-date stamp → non-empty + duplicate gates → staging
-  * overwrite + history append.
+  * conformance → load-date stamp → one gate pass (duplicate keys and the
+  * row count in one grouped aggregate; an empty load aborts on that
+  * count) → staging overwrite + history append.
   *
   * Differences from the reference, by design (SURVEY §1.4, §7.4):
   *  - the load date is an injected [[RunDate]], not `current_date()` —
@@ -32,13 +33,13 @@ object Ingestion {
              warehouse: Warehouse): IngestResult = {
     val drift = SchemaOps.drift(source, contract)
     val conformed = Exp.stampDayDt(SchemaOps.conformByName(source, contract), runDate)
-      .persist() // consumed by two gates and two writes — read the source once
+      .persist() // consumed by the gate and two writes — read the source once
     try {
-      Validator.requireNonEmpty(conformed, entity)
-      Validator.requireUnique(conformed, keys :+ "day_dt")
+      val rows = Validator.requireUnique(conformed, keys :+ "day_dt")
+      Validator.requireNonEmpty(rows, entity)
       warehouse.writeStaging(conformed, entity)
       warehouse.appendHistory(conformed, entity)
-      IngestResult(entity, conformed.count(), drift)
+      IngestResult(entity, rows, drift)
     } finally conformed.unpersist()
   }
 }

@@ -31,7 +31,7 @@ object Marts {
 
   /** Materialize one mart snapshot. The duplicate gate runs on
     * (keys, day_dt) BEFORE the append, exactly like every reference call
-    * site. Returns the snapshot row count. */
+    * site. Returns the snapshot row count, taken by that gate pass. */
   def materialize(spark: SparkSession, dir: String, mart: Mart,
                   runDate: RunDate, warehouse: Warehouse): Long = {
     val df = mart.build(spark, dir)
@@ -40,9 +40,9 @@ object Marts {
       else Exp.stampDayDt(df, runDate)
     val snapshot = stamped.persist()
     try {
-      Validator.requireUnique(snapshot, mart.keys :+ "day_dt")
+      val rows = Validator.requireUnique(snapshot, mart.keys :+ "day_dt")
       warehouse.appendHistory(snapshot, mart.name)
-      snapshot.count()
+      rows
     } finally snapshot.unpersist()
   }
 

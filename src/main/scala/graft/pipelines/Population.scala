@@ -40,9 +40,10 @@ object Population {
     val stamped = graft.ops.Exp.stampDayDt(renamed, runDate)
       .persist()
     try {
-      Validator.requireNonEmpty(stamped, "population")
+      val rows = stamped.count()
+      Validator.requireNonEmpty(rows, "population")
       warehouse.writeStaging(stamped, "population")
-      stamped.count()
+      rows
     } finally stamped.unpersist()
   }
 }

@@ -1,10 +1,12 @@
 package graft.validate
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Observation}
 import org.apache.spark.sql.functions._
 
 /** Runtime data-quality gates — first-class operators in the reference
-  * (SURVEY §2.11).
+  * (SURVEY §2.11). A publish runs one gate pass: [[Validator.requireUnique]]
+  * checks the keys and returns the row count taken on the way, and
+  * [[Validator.requireNonEmpty]] checks that count.
   */
 final class DuplicateException(msg: String) extends RuntimeException(msg)
 
@@ -21,19 +23,28 @@ object Validator {
 
   /** Abort (throw) if any key group has >1 row — the reference's gate run
     * before every write (reference: utils.py:108-142; call sites
-    * ingestion_task.py:56,117,172,234). Uses `isEmpty`, which stops at the
-    * first violating row instead of counting all of them. */
-  def requireUnique(df: DataFrame, keys: Seq[String]): Unit = {
-    val dups = duplicateKeys(df, keys)
-    if (!dups.isEmpty)
+    * ingestion_task.py:56,117,172,234). One grouped pass: the first five
+    * violators by key come back in one job (none means pass, some are the
+    * message; an unordered `limit` would re-scan in rounds when there are
+    * none), and the frame's row count is observed on the map side of the
+    * same aggregate, so the caller needs no `count()` of its own. Returns
+    * that row count. */
+  def requireUnique(df: DataFrame, keys: Seq[String]): Long = {
+    val rows = Observation()
+    val dups = duplicateKeys(df.observe(rows, count(lit(1)).as("rows")), keys)
+      .orderBy(keys.map(col): _*).limit(5).collect()
+    if (dups.nonEmpty)
       throw new DuplicateException(
-        s"duplicate keys on (${keys.mkString(", ")}): " +
-          dups.limit(5).collect().mkString("; "))
+        s"duplicate keys on (${keys.mkString(", ")}): " + dups.mkString("; "))
+    // AQE replaces a stage over an empty input, and the observation then
+    // comes back without the metric: count the frame, never assume 0
+    rows.get.get("rows").fold(df.count())(_.asInstanceOf[Long])
   }
 
-  /** Reject empty inputs (reference: ingestion_task.py:32-33,91-93,151-153). */
-  def requireNonEmpty(df: DataFrame, what: String): Unit =
-    if (df.isEmpty) throw new IllegalStateException(s"empty input: $what")
+  /** Reject empty inputs (reference: ingestion_task.py:32-33,91-93,151-153),
+    * given the row count a gate pass already took — no Spark job. */
+  def requireNonEmpty(rows: Long, what: String): Unit =
+    if (rows == 0) throw new IllegalStateException(s"empty input: $what")
 
   /** Referential-integrity audit across the warehouse's FK relations:
     * child row count, orphan rows (child rows whose FK value has no

@@ -265,6 +265,60 @@ class ConnectSpec extends SparkSpec {
     }
   }
 
+  /** `body`'s result and the number of Spark jobs it ran, counted by job
+    * group. */
+  private def withJobs[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${System.nanoTime()}"
+    sc.setJobGroup(group, group)
+    val result = try body finally sc.clearJobGroup()
+    org.apache.spark.ListenerBusDrain(sc)
+    (result, sc.statusTracker.getJobIdsForGroup(group).length)
+  }
+
+  test("ingestion: one gate pass and the two writes, no count after them") {
+    import spark.implicits._
+    val wh = new ParquetWarehouse(tmpDir("graft_wh_jobs"))
+    val day = Seq((1L, 5.0, "OK"), (2L, 6.0, "OK")).toDF("sale_id", "amount", "status")
+    val (result, jobs) = withJobs(Ingestion.ingest(day, "sales", contract,
+      Seq("SALE_ID"), RunDate("2024-06-01"), wh))
+    assert(result.rows == 2)
+    // the gate pass (building the frame's cache, which adaptive execution
+    // runs as a job of its own, the grouped map stage and the violator
+    // read) + staging write + history write; a separate empty probe,
+    // duplicate probe and trailing count() made this 7
+    assert(jobs == 5, s"$jobs jobs")
+  }
+
+  test("marts: the gate pass takes the row count, no count after the append") {
+    import graft.pipelines.Marts
+    val wh = new ParquetWarehouse(tmpDir("graft_marts_jobs"))
+    val mart = Marts.all.find(_.name == "supplier_performance").get
+    spark.catalog.clearCache() // build from the files, not another spec's cache
+    val (rows, jobs) = withJobs(
+      Marts.materialize(spark, sf, mart, RunDate("2024-06-01"), wh))
+    assert(rows > 0 && rows == wh.readHistory(spark, mart.name).count())
+    // the duplicate probe followed by a trailing count() made this 19
+    assert(jobs == 17, s"$jobs jobs")
+  }
+
+  test("ingestion: an empty input aborts before any write") {
+    import spark.implicits._
+    val wh = new ParquetWarehouse(tmpDir("graft_wh_empty"))
+    val empty = Seq.empty[(Long, Double, String)].toDF("sale_id", "amount", "status")
+    val e = intercept[IllegalStateException] {
+      Ingestion.ingest(empty, "sales", contract, Seq("SALE_ID"),
+        RunDate("2024-06-01"), wh)
+    }
+    assert(e.getMessage == "empty input: sales")
+    intercept[org.apache.spark.sql.AnalysisException] {
+      wh.readStaging(spark, "sales").collect() // nothing was published
+    }
+    intercept[org.apache.spark.sql.AnalysisException] {
+      wh.readHistory(spark, "sales").collect()
+    }
+  }
+
   test("orc: partitioned write round-trips with schema intact") {
     import spark.implicits._
     val dir = tmpDir("graft_orc")

@@ -11,13 +11,14 @@ class ValidatorSpec extends SparkSpec {
 
   test("requireUnique passes on unique keys") {
     val df = Seq((1, "a"), (2, "b")).toDF("k", "v")
-    Validator.requireUnique(df, Seq("k")) // must not throw
+    assert(Validator.requireUnique(df, Seq("k")) == 2) // row count, no throw
   }
 
   test("requireUnique throws DuplicateException on duplicate keys") {
-    val df = Seq((1, "a"), (1, "b"), (2, "c")).toDF("k", "v")
+    val df = Seq((7, "a"), (7, "b"), (2, "c")).toDF("k", "v")
     val e = intercept[DuplicateException](Validator.requireUnique(df, Seq("k")))
     assert(e.getMessage.contains("k"))
+    assert(e.getMessage.contains("[7,2]"), e.getMessage) // the violating key and its count
   }
 
   test("duplicateKeys reports only violating keys with counts") {
@@ -27,8 +28,9 @@ class ValidatorSpec extends SparkSpec {
   }
 
   test("requireNonEmpty rejects empty input") {
-    intercept[IllegalStateException](
-      Validator.requireNonEmpty(Seq.empty[Int].toDF("x"), "x"))
+    val e = intercept[IllegalStateException](Validator.requireNonEmpty(0L, "x"))
+    assert(e.getMessage == "empty input: x")
+    Validator.requireNonEmpty(1L, "x") // a non-zero count passes
   }
 }
 

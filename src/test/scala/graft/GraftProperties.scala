@@ -25,10 +25,10 @@ object GraftProperties extends Properties("graft") {
     forAll(keyGen) { keys =>
       val df = keys.zipWithIndex.toDF("k", "v")
       val hasDups = keys.distinct.size != keys.size
-      val threw =
-        try { Validator.requireUnique(df, Seq("k")); false }
-        catch { case _: DuplicateException => true }
-      threw == hasDups
+      val rows =
+        try Some(Validator.requireUnique(df, Seq("k")))
+        catch { case _: DuplicateException => None }
+      rows.isEmpty == hasDups && rows.forall(_ == keys.size)
     }
 
   private val rowGen: Gen[List[(Int, Option[String])]] =

@@ -265,33 +265,6 @@ class Round4bOpsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  // --------------------------------------------------------- observe
-  test("Observe.counters: in-flight metrics match recomputation, " +
-       "null budget gates fire") {
-    val df = Seq((1L, Some("a")), (2L, None), (3L, Some("c")), (4L, None))
-      .toDF("id", "v")
-    val (instrumented, obs) = graft.validate.Observe.counters(df, "t", Seq("v"))
-    // metrics ride the SAME action — no extra scan
-    assert(instrumented.count() == 4)
-    val m = obs.get
-    assert(m("n_rows") == 4L && m("n_null_v") == 2L)
-    intercept[IllegalArgumentException] {
-      graft.validate.Observe.requireNullBudget(obs, Seq("v"), 0.25)
-    }
-    graft.validate.Observe.requireNullBudget(obs, Seq("v"), 0.5) // passes
-  }
-
-  test("Observe.counters on the corpus load path") {
-    val docs = graft.core.Tables.documents(spark, sf)
-    val (instrumented, obs) = graft.validate.Observe
-      .counters(docs, "docs", Seq("text", "lang"))
-    val n = instrumented.count()
-    val m = obs.get
-    assert(m("n_rows") == n)
-    assert(m("n_null_text") == 0L && m("n_null_lang") == 0L)
-    graft.validate.Observe.requireNullBudget(obs, Seq("text", "lang"), 0.0)
-  }
-
   // -------------------------------------------------------- pageRank
   test("pageRank matches a hand-computed 3-node graph") {
     // u->v weights: a->b:2, a->c:1, b->a:1, c->a:1  (out: a=3, b=1, c=1)
